@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Regression detector: medians are compared against the previous round's
   * committed snapshot (`bench_out.json`, overridable via
-  * SPARK_GRAFT_BENCH_PREV). Any query whose median moved more than 2x in
+  * SPARK_GRAFT_BENCH_PREV), provided it was measured at the same core count
+  * (its `cpus` field). Any query whose median moved more than 2x in
   * either direction AND by more than an absolute floor (0.5 s — sub-second
   * queries double on pure scheduler jitter) is re-measured with `ExtraReps`
   * additional samples and its median recomputed over ALL samples before the
@@ -67,14 +68,22 @@ object Bench {
 
   /** Previous round's per-query medians from its bench_out.json line.
     * Jackson ships in Spark's classpath; absence/corruption of the file just
-    * disables the detector (first round, or a fresh checkout). */
-  private def loadPrev(path: String): Map[String, Double] =
+    * disables the detector (first round, or a fresh checkout). A line
+    * measured on a different core count (or not recording one) is ignored
+    * with a warning: medians taken at 8 cores would mis-steer both the
+    * adaptive reps and the 2x detector of a 32-core run. */
+  private def loadPrev(path: String, cpus: String): Map[String, Double] =
     try {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val root = mapper.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
       val qs = root.get("queries")
+      val prevCpus = Option(root.get("cpus")).map(_.asText())
       if (qs == null) Map.empty
-      else {
+      else if (!prevCpus.contains(cpus)) {
+        System.err.println(s"[bench] ignoring $path: measured at " +
+          s"${prevCpus.getOrElse("an unrecorded")} cpus, this run uses $cpus")
+        Map.empty
+      } else {
         val it = qs.properties().iterator()
         val b = Map.newBuilder[String, Double]
         while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble(-1.0) }
@@ -86,7 +95,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "bench_out.json")
-    val prev = loadPrev(prevPath)
+    val prev = loadPrev(prevPath, cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -147,7 +156,7 @@ object Bench {
         String.format(java.util.Locale.ROOT, "%.3f", Double.box(sec)) + "}"
       case (n, None) => "\"" + n + "\":{\"status\":\"warm\"}"
     }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"flaky":$flaky,"reruns":$reruns,"reps":$Reps,"single_rep_queries":$singleRep,"wall_sec":${String.format(java.util.Locale.ROOT, "%.1f", Double.box(wallSec))},"artifacts":$artifacts,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"flaky":$flaky,"reruns":$reruns,"reps":$Reps,"single_rep_queries":$singleRep,"wall_sec":${String.format(java.util.Locale.ROOT, "%.1f", Double.box(wallSec))},"artifacts":$artifacts,"sf":"$sfDir","cpus":"$cpus"}"""
     println(line)
     // Also persist the full line to a file: the driver captures only the
     // stdout TAIL, which has truncated past rounds' per-query entries —

@@ -32,7 +32,10 @@ sealed trait Materialization
 object Materialization {
   /** Lazy composed DataFrames — Catalyst optimizes ACROSS model boundaries
     * (column pruning through the whole DAG), the fused mode the reference
-    * engine cannot do. Same results; strictly less work at scale. */
+    * engine cannot do. Same results, but not less work: on this DAG the
+    * fused build of the 4 marts measured 2.2x the wall time of the
+    * materialized build of all 40 models (`perfbench/BENCHMARK.md`,
+    * "Findings"). */
   case object Compose extends Materialization
 
   /** dbt's `materialized='table'` pipeline-breaker semantics to bare parquet
@@ -44,18 +47,6 @@ object Materialization {
     * address models as `spark.table("main.mart_...")` exactly as the
     * reference's Athena/Iceberg consumers do. */
   final case class Catalog(schemaOf: String => String = Materialization.layerSchema)
-    extends Materialization
-
-  /** [[Catalog]] with time travel: each model lands as a NEW `v=<n>`
-    * directory under `root/<schema>/<model>/` (the [[VersionedTable]]
-    * protocol — complete versions, never partially-visible tables), and the
-    * catalog table is re-pointed at the newest version. Re-running the
-    * pipeline therefore preserves every prior run's tables for
-    * `VersionedTable.read(..., version = Some(v))` — the snapshot-isolation
-    * face of the reference's Iceberg materializations, without a format
-    * dependency. `vacuum` bounds retention. */
-  final case class VersionedCatalog(root: String,
-      schemaOf: String => String = Materialization.layerSchema)
     extends Materialization
 
   /** The FULL table contract for every materialized model: each lands as an
@@ -186,7 +177,6 @@ final class DagRunner(models: Seq[Model], sources: Map[String, DataFrame] = Map.
         throw new NoSuchElementException(s"unknown ref/source: $n")))
     val schemaOfOpt = mat match {
       case Materialization.Catalog(schemaOf) => Some(schemaOf)
-      case Materialization.VersionedCatalog(_, schemaOf) => Some(schemaOf)
       // VersionedHiddenDir is path-addressed (composite multi-era reads
       // cannot be a single-LOCATION catalog table; the graft_table TVF is
       // the SQL face) — no databases to create
@@ -222,32 +212,6 @@ final class DagRunner(models: Seq[Model], sources: Map[String, DataFrame] = Map.
             spark.sessionState.catalog.getTableMetadata(
               org.apache.spark.sql.catalyst.TableIdentifier(n, Some(schemaOf(n))))
               .location.toString, spark.table(fqn))
-        case Materialization.VersionedCatalog(root, schemaOf) =>
-          val tableDir = s"$root/${schemaOf(n)}/$n"
-          // stage + publish, never a direct v=<n> write: a direct write
-          // would expose the half-written directory as versions().max to a
-          // concurrent VersionedTable.read (the documented time-travel
-          // path), leave a corrupt latest version on crash, and allocate
-          // the id outside publishLock (colliding with a concurrent
-          // publish). The staged write is invisible until the atomic
-          // publish rename commits it.
-          val token = VersionedTable.stage(spark, tableDir, df)
-          // the stats manifest lands INSIDE the staged candidate, so it
-          // rides the publish rename — a published version always carries
-          // its per-file stats (count pushdown + skipping on mart reads)
-          graft.sources.FileStats.write(spark,
-            VersionedTable.stagedPath(tableDir, token))
-          val v = VersionedTable.publish(tableDir, token)
-          val path = s"$tableDir/v=$v"
-          // re-point the catalog name at the new version; prior versions
-          // stay readable via VersionedTable.read(tableDir, Some(v)).
-          // (DROP+CREATE is a brief catalog-name gap for concurrent
-          // spark.table readers — the session catalog has no atomic
-          // re-point; path-based VersionedTable.read never sees it.)
-          val fqn = s"${schemaOf(n)}.$n"
-          spark.sql(s"DROP TABLE IF EXISTS $fqn")
-          spark.sql(s"CREATE TABLE $fqn USING parquet LOCATION '$path'")
-          graft.sources.JoinAdvisor.autoHinted(spark, path, spark.table(fqn))
         case Materialization.VersionedHiddenDir(root, transformsOf, schemaOf) =>
           val tableDir = s"$root/${schemaOf(n)}/$n"
           // one op=overwrite snapshot per run: prior runs stay readable

@@ -21,7 +21,7 @@ final class CommitConflictException(val tableDir: String,
       s"but v=$actualLatest has published since — rebase or re-run")
 
 /** Snapshot-versioned, hidden-partitioned table — the two facilities
-  * ([[graft.pipeline.VersionedTable]]'s WAP/time-travel protocol and
+  * (a snapshot log with write-audit-publish and time travel, and
   * [[HiddenPartitioning]]'s spec'd layout/pruning) composed the way a real
   * Iceberg table is BOTH at once: immutable era data directories, each with
   * its own partition spec and pruned under it, referenced by tiny
@@ -824,9 +824,7 @@ object VersionedHiddenTable {
   def create(spark: SparkSession, tableDir: String, df: DataFrame,
       transforms: Seq[Transform]): Long = {
     require(versions(spark, tableDir).isEmpty, s"table already exists: $tableDir")
-    val era = writeEra(spark, tableDir, df, transforms)
-    publish(spark, tableDir,
-      stageSnapshot(spark, tableDir, Seq(era), None, "create", Some(-1L)))
+    overwrite(spark, tableDir, df, transforms)
   }
 
   /** Full-content REPLACE with snapshot semantics — dbt's `table`
@@ -839,15 +837,23 @@ object VersionedHiddenTable {
     * Creates the table on first use (under `transforms`; an existing
     * table's current spec wins, like [[appendOrCreate]]). Returns the
     * published version. Unlike `op=replace` ([[compact]]), an overwrite is
-    * NOT content-preserving — the changelog always diffs it for real. */
+    * NOT content-preserving — the changelog always diffs it for real.
+    *
+    * `batchId` tags the snapshot with a `_batch-<id>` marker that rides the
+    * publish rename, first write included — the replay guard of writers
+    * that rebuild the whole table per micro-batch (test
+    * [[publishedBatchIds]] before recomputing), as for [[append]]. */
   def overwrite(spark: SparkSession, tableDir: String, df: DataFrame,
-      transforms: Seq[Transform] = Nil): Long = {
+      transforms: Seq[Transform] = Nil, batchId: Option[String] = None): Long = {
     val vs = mainVersions(spark, tableDir)
-    if (vs.isEmpty) return create(spark, tableDir, df, transforms)
-    val spec = currentSpec(spark, tableDir, snapshot(spark, tableDir, vs.max)._1)
+    val spec =
+      if (vs.isEmpty) transforms
+      else currentSpec(spark, tableDir, snapshot(spark, tableDir, vs.max)._1)
     val era = writeEra(spark, tableDir, df, spec)
     publish(spark, tableDir,
-      stageSnapshot(spark, tableDir, Seq(era), None, "overwrite", Some(vs.max)))
+      stageSnapshot(spark, tableDir, Seq(era), batchId,
+        if (vs.isEmpty) "create" else "overwrite",
+        Some(vs.lastOption.getOrElse(-1L))))
   }
 
   /** Marker naming an era as SCHEMA-ONLY ([[evolveSchema]]): it carries the
@@ -1831,10 +1837,9 @@ object VersionedHiddenTable {
     * With `clusterBy`, the rewrite is Iceberg's rewrite-with-SORT-ORDER:
     * rows range-partition on the cluster keys into `ceil(bytes /
     * targetBytes)` write tasks (file count from the snapshot's ACTUAL
-    * bytes — the over-128MB sizing a table service does, the
-    * `VersionedTable.compactBySize` discipline), so inside every derived
-    * partition directory each task's file covers a narrow, pairwise-
-    * disjoint cluster-key span. That is exactly the layout
+    * bytes — the over-128MB sizing a table service does), so inside
+    * every derived partition directory each task's file covers a narrow,
+    * pairwise-disjoint cluster-key span. That is exactly the layout
     * [[StatsFileSkipping]] monetizes: after a clustered compaction,
     * key-range predicates skip most files at plan time — the maintenance
     * operation that turns an append-ordered table into a skippable one

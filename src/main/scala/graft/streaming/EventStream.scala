@@ -280,71 +280,64 @@ object EventStream {
 
   // ---- streaming merge sink (the streaming face of i1) -----------------------
 
-  /** `foreachBatch` merge sink: each micro-batch upserts into a versioned
-    * parquet table via [[graft.pipeline.Incremental.upsert]] — the streaming
-    * face of the dbt incremental materialization. Each merge STAGES the new
-    * state and publishes it with the atomic WAP rename, tagged with the
-    * batch id ([[graft.pipeline.VersionedTable.writeAuditPublish]]): a
-    * direct `v=<n>` write would expose the half-written directory as the
-    * newest version to a concurrent [[latestVersion]] reader and leave a
-    * corrupt latest on crash. The riding `_batch-<id>` marker makes
-    * replays idempotent — a re-offered batch after a crash between publish
-    * and checkpoint commit is skipped, never re-merged. This is the manual
-    * core of what a transactional table format does with a commit log; at
-    * 100 TB the version list would live in a metastore, not a directory
-    * listing. */
+  /** `foreachBatch` merge sink: each micro-batch upserts into a
+    * [[graft.sources.VersionedHiddenTable]] via
+    * [[graft.pipeline.Incremental.upsert]] — the streaming face of the dbt
+    * incremental materialization. Each merge lands the new state as one
+    * `op=overwrite` snapshot tagged with the batch id: the era data is
+    * invisible until the atomic publish rename, so a concurrent
+    * [[latestVersion]] reader never sees a half-written state and a crash
+    * leaves the previous snapshot current. The `_batch-<id>` marker rides
+    * that rename, which makes replays idempotent — a batch re-offered after
+    * a crash between publish and checkpoint commit is skipped, never
+    * re-merged. Being a full table, the sink also answers `changes()`,
+    * `TableService.maintain` and the `graft_table` TVF. */
   def startUpsertToParquet(events: DataFrame, tableDir: String,
       checkpoint: String, keys: Seq[String] = Seq("user_id")): StreamingQuery =
-    events.withWatermark("ts", "10 minutes").writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val vt = graft.pipeline.VersionedTable
-        if (!vt.publishedBatchIds(tableDir).contains(batchId.toString)) {
-          val versions = vt.versions(tableDir)
-          val base =
-            if (versions.isEmpty) batch.limit(0)
-            else spark.read.parquet(s"$tableDir/v=${versions.max}")
-          val merged = graft.pipeline.Incremental
-            .upsert(base, batch.toDF(), keys, "ts", "event_id")
-          vt.writeAuditPublish(spark, tableDir, merged,
-            batchId = Some(batchId.toString))(_ => Nil): Unit
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    foldIntoTable(events, tableDir, checkpoint) { (base, batch) =>
+      graft.pipeline.Incremental.upsert(
+        base.getOrElse(batch.limit(0)), batch, keys, "ts", "event_id")
+    }
 
   /** `foreachBatch` SCD2 sink: each micro-batch folds into a versioned SCD2
     * history table via [[graft.pipeline.Incremental.scd2Apply]] — the
-    * streaming face of the dbt snapshot. Same versioned-parquet protocol as
-    * [[startUpsertToParquet]] (retry-idempotent, readers see complete
-    * versions); `IncrementalSpec` proves the per-batch fold converges to the
-    * batch rebuild, so the stream's history equals what a backfill computes.
+    * streaming face of the dbt snapshot. Same snapshot protocol as
+    * [[startUpsertToParquet]] (replay-idempotent, readers see complete
+    * snapshots); `IncrementalSpec` proves the per-batch fold converges to
+    * the batch rebuild, so the stream's history equals what a backfill
+    * computes.
     */
   def startScd2ToParquet(events: DataFrame, tableDir: String,
       checkpoint: String, attr: String = "event_type"): StreamingQuery =
+    foldIntoTable(events, tableDir, checkpoint) { (base, batch) =>
+      val changes = batch.select(col("user_id"), col(attr), col("ts"),
+        col("event_id"))
+      val history = base.getOrElse(graft.pipeline.Incremental.scd2Rebuild(
+        changes.limit(0), Seq("user_id"), attr, "ts", "event_id"))
+      graft.pipeline.Incremental
+        .scd2Apply(history, changes, Seq("user_id"), attr, "ts", "event_id")
+    }
+
+  /** The shared sink loop: skip a batch whose id is already published,
+    * otherwise fold it into the latest snapshot (None before the first
+    * write) and publish the result as one overwrite snapshot carrying the
+    * batch-id marker. */
+  private def foldIntoTable(events: DataFrame, tableDir: String,
+      checkpoint: String)(
+      fold: (Option[DataFrame], DataFrame) => DataFrame): StreamingQuery =
     events.withWatermark("ts", "10 minutes").writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val vt = graft.pipeline.VersionedTable
-        // same staged-publish + batch-marker protocol as the upsert sink:
-        // no reader ever observes a partial version, replays skip
-        if (!vt.publishedBatchIds(tableDir).contains(batchId.toString)) {
-          val versions = vt.versions(tableDir)
-          val changes = batch.toDF().select(col("user_id"), col(attr), col("ts"),
-            col("event_id"))
-          val history =
-            if (versions.isEmpty)
-              graft.pipeline.Incremental.scd2Rebuild(changes.limit(0),
-                Seq("user_id"), attr, "ts", "event_id")
-            else spark.read.parquet(s"$tableDir/v=${versions.max}")
-          val next = graft.pipeline.Incremental
-            .scd2Apply(history, changes, Seq("user_id"), attr, "ts", "event_id")
-          vt.writeAuditPublish(spark, tableDir, next,
-            batchId = Some(batchId.toString))(_ => Nil): Unit
+        val vht = graft.sources.VersionedHiddenTable
+        val id = batchId.toString
+        if (!vht.publishedBatchIds(spark, tableDir).contains(id)) {
+          val base =
+            if (vht.versions(spark, tableDir).isEmpty) None
+            else Some(vht.read(spark, tableDir))
+          vht.overwrite(spark, tableDir, fold(base, batch.toDF()),
+            batchId = Some(id)): Unit
         }
       }
       .trigger(Trigger.AvailableNow())
@@ -458,9 +451,10 @@ object EventStream {
     graft.sources.VersionedHiddenTable.read(spark, tableDir)
   }
 
-  /** Latest materialized version of a [[startUpsertToParquet]] table. */
+  /** Latest snapshot of a [[startUpsertToParquet]] or
+    * [[startScd2ToParquet]] table. */
   def latestVersion(spark: SparkSession, tableDir: String): DataFrame =
-    graft.pipeline.VersionedTable.read(spark, tableDir)
+    graft.sources.VersionedHiddenTable.read(spark, tableDir)
 
   // ---- stateful sessionization (flatMapGroupsWithState) ---------------------
 

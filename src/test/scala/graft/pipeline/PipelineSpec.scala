@@ -449,42 +449,40 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .contains("mart_sgp_factors"))
   }
 
-  test("versioned catalog: two pipeline runs leave two readable versions of a mart", graft.Slow) {
-    val vroot = Files.createTempDirectory("graft-vcat").toString
-    Pipeline.runVersioned(spark, root, vroot)
-    Pipeline.runVersioned(spark, root, vroot)
+  test("versioned-hidden pipeline: two runs leave two readable snapshots of a mart", graft.Slow) {
+    val VHT = graft.sources.VersionedHiddenTable
+    val vroot = Files.createTempDirectory("graft-vhtrun").toString
+    Pipeline.runVersionedHidden(spark, root, vroot)
+    Pipeline.runVersionedHidden(spark, root, vroot)
     val martDir = s"$vroot/main/mart_preseason_overall_rankings_oc"
-    val vs = VersionedTable.versions(martDir)
-    assert(vs == Seq(0L, 1L), s"two runs must leave v=0 and v=1, got $vs")
-    val v0 = VersionedTable.read(spark, martDir, Some(0L))
-    val v1 = VersionedTable.read(spark, martDir, Some(1L))
+    val vs = VHT.versions(spark, martDir)
+    assert(vs == Seq(0L, 1L), s"two runs must publish v=0 and v=1, got $vs")
+    val v0 = VHT.read(spark, martDir, Some(0L))
+    val v1 = VHT.read(spark, martDir, Some(1L))
     assert(v0.count() > 0 && v0.count() === v1.count(),
-      "same inputs: both versions readable with identical row counts")
-    // the catalog name points at the NEWEST version
-    val cat = spark.table("main.mart_preseason_overall_rankings_oc")
-    assert(cat.count() === v1.count())
-    assert(cat.inputFiles.forall(_.contains("v=1")),
-      s"catalog table must read v=1, reads: ${cat.inputFiles.take(3).mkString(",")}")
-    // the storage contract reaches the parity marts: every published version
-    // carries a per-file stats manifest (it rode the publish rename), so a
+      "same inputs: both snapshots readable with identical row counts")
+    // the storage contract reaches the parity marts: the live era carries a
+    // per-file stats manifest (written before the snapshot published), so a
     // bare count folds to metadata and the SQL metadata face answers scan-free
-    assert(new java.io.File(s"$martDir/v=1/${graft.sources.FileStats.StatsFile}").isFile,
-      "published mart versions must carry their stats manifest")
+    val liveEras = VHT.snapshotsMeta(spark, martDir).filter(col("version") === 1L)
+      .select("eras").head().getSeq[String](0)
+    assert(liveEras.nonEmpty && liveEras.forall(e =>
+      new java.io.File(s"$martDir/data/$e/${graft.sources.FileStats.StatsFile}").isFile),
+      s"the live mart era must carry its stats manifest: $liveEras")
     graft.sources.HiddenPartitioning.register(spark)
-    val bare = v1.agg(org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("n"))
+    val bare = v1.agg(count(lit(1)).as("n"))
     assert(bare.head().getLong(0) == v1.count())
     assert(bare.queryExecution.optimizedPlan.collectFirst {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
     }.isDefined, "a mart count(*) must fold from the manifest:\n" +
       bare.queryExecution.optimizedPlan.treeString)
     graft.functions.GraftFunctions.register(spark)
-    assert(spark.sql(s"SELECT sum(rows) AS n FROM graft_files('$martDir/v=1')")
+    assert(spark.sql(s"SELECT sum(rows) AS n FROM graft_files('$martDir')")
       .head().getLong(0) == v1.count(),
-      "graft_files must answer over a mart version from its manifest")
+      "graft_files must answer over the mart's live snapshot from its manifest")
     // vacuum retires v=0; v=1 survives
-    assert(VersionedTable.vacuum(martDir, keep = 1) == Seq(0L))
-    assert(VersionedTable.versions(martDir) == Seq(1L))
+    assert(VHT.vacuum(spark, martDir, keep = 1) == Seq(0L))
+    assert(VHT.versions(spark, martDir) == Seq(1L))
   }
 
   test("versioned-hidden marts: overwrite snapshots per run; run-over-run CDC folds forward exactly") {

@@ -80,12 +80,16 @@ class VersionedHiddenTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     VersionedHiddenTable.create(spark, t, h1, Seq(HiddenPartitioning.DayT("ts")))
     // the audit sees the STAGED composite (what readers WOULD see) and vetoes
     var auditSawRows = -1L
+    var readersSaw = Seq.empty[Long]
     val res = VersionedHiddenTable.append(spark, t, h2) { staged =>
       auditSawRows = staged.count()
+      readersSaw = ids(VersionedHiddenTable.read(spark, t))
       Seq("rowcount jumped beyond the contract")
     }
     assert(res == Left(Seq("rowcount jumped beyond the contract")))
     assert(auditSawRows == ev.count(), "audit must run against the staged composite")
+    assert(readersSaw == ids(h1),
+      "while the audit runs, readers must see only the committed snapshot")
     assert(VersionedHiddenTable.versions(spark, t) == Seq(0L),
       "a vetoed append must publish no snapshot")
     assert(ids(VersionedHiddenTable.read(spark, t)) == ids(h1),
@@ -215,6 +219,12 @@ class VersionedHiddenTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     VersionedHiddenTable.append(spark, t, h2, batchId = Some("b-18")) { _ => Seq("no") }
     assert(VersionedHiddenTable.publishedBatchIds(spark, t) == Set("b-17"),
       "an aborted append leaves no published batch marker")
+    // overwrite carries the marker too, on the first (create) write as well
+    val t2 = tmp("batch-ow")
+    VersionedHiddenTable.overwrite(spark, t2, h1, batchId = Some("0"))
+    VersionedHiddenTable.overwrite(spark, t2, h2, batchId = Some("1"))
+    assert(VersionedHiddenTable.publishedBatchIds(spark, t2) == Set("0", "1"))
+    assert(ids(VersionedHiddenTable.read(spark, t2)) == ids(h2))
   }
 
   test("delete: copy-on-write rewrites only matching eras; older snapshots keep the rows") {

@@ -28,6 +28,21 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def ev(id: Long, minute: Int, user: Long, typ: String, v: Double) =
     EventStream.Event(id, new Timestamp(1700000000000L + minute * 60000L), user, typ, v)
 
+  /** A sink table is a full snapshot table: its changelog folds the first
+    * snapshot forward to the latest state. */
+  private def assertChangesFoldToLatest(tbl: String): Unit = {
+    val vht = graft.sources.VersionedHiddenTable
+    val ch = vht.changes(spark, tbl, 0L)
+    val meta = Seq("_change_type", "_commit_version")
+    val folded = vht.read(spark, tbl, Some(0L))
+      .exceptAll(ch.filter(col("_change_type") === "delete").drop(meta: _*))
+      .unionByName(ch.filter(col("_change_type") === "insert").drop(meta: _*))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(folded) == rows(EventStream.latestVersion(spark, tbl)),
+      "fold(v0, changes(0)) must reproduce the latest snapshot")
+  }
+
   test("streaming windowed agg equals the batch plan on the same data") {
     val sp = spark
     import sp.implicits._
@@ -338,6 +353,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(got === Set((1L, 12L, "b"), (2L, 11L, "a"), (3L, 13L, "a")),
       s"merged table must hold the latest event per user, got $got")
+    assertChangesFoldToLatest(tbl)
   }
 
   test("checkpoint restart: a resumed query processes only new data, state stays correct") {
@@ -356,7 +372,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val run1 = EventStream.startUpsertToParquet(
       input.toDF().withColumn("props", lit("{}")), tbl, cp)
     run1.processAllAvailable(); run1.stop()
-    val versionsAfterRun1 = graft.pipeline.VersionedTable.versions(tbl)
+    val versionsAfterRun1 = graft.sources.VersionedHiddenTable.versions(spark, tbl)
 
     // data arriving while the query is DOWN
     input.addData(Seq(ev(22, 5, 1, "b", 3), ev(23, 6, 3, "a", 4)))
@@ -364,7 +380,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       input.toDF().withColumn("props", lit("{}")), tbl, cp)
     run2.processAllAvailable(); run2.stop()
 
-    val newVersions = graft.pipeline.VersionedTable.versions(tbl)
+    val newVersions = graft.sources.VersionedHiddenTable.versions(spark, tbl)
       .diff(versionsAfterRun1)
     assert(newVersions.nonEmpty, "the resumed run must commit new versions")
     assert(newVersions.forall(v => v > versionsAfterRun1.max),
@@ -374,6 +390,8 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(got === Set((1L, 22L, "b"), (2L, 21L, "a"), (3L, 23L, "a")),
       s"state after restart must equal the never-stopped run, got $got")
+    // two runs publish at least two snapshots, so changes(0) is not empty here
+    assertChangesFoldToLatest(tbl)
   }
 
   test("streaming SCD2 sink: folded history equals the batch rebuild (i3 twin)") {
